@@ -97,7 +97,6 @@ object ProcStat {
     * multi-second stall rows this exists for get 10+ samples), and
     * sampling costs one getAllStackTraces per 500 ms (~1 ms each). */
   final class StallSampler extends Thread {
-    @volatile private var stopped = false
     private var samples = 0
     private var stalledSamples = 0
     private val sites = new java.util.HashMap[String, Integer]()
@@ -113,7 +112,7 @@ object ProcStat {
     override def run(): Unit =
       try {
         Thread.sleep(1000)
-        while (!stopped) {
+        while (!isInterrupted) {
           val all = Thread.getAllStackTraces
           var active = 0; var runnable = 0; var site: String = null
           val it = all.entrySet().iterator()
@@ -151,10 +150,10 @@ object ProcStat {
         }
       } catch { case _: InterruptedException => case scala.util.control.NonFatal(_) => }
 
-    /** (fraction of samples that were stalled, modal park site or ""). */
+    /** Stops the sampler; returns (stalled-sample fraction, modal park site or ""). */
     def finish(): (Double, String) = {
-      stopped = true
       interrupt()
+      join()
       synchronized {
         val frac = if (samples == 0) 0.0 else stalledSamples.toDouble / samples
         var best: String = ""; var bestN = 0
@@ -201,25 +200,20 @@ object ProcStat {
     val wall0 = System.nanoTime()
     val sampler = new StallSampler
     sampler.start()
-    val r = try body finally ()
-    val (stallFrac, stallSite) = sampler.finish()
+    var stall = (0.0, "")
+    val r = try body finally stall = sampler.finish()
     val wallUs = math.max(1L, (System.nanoTime() - wall0) / 1000L).toDouble
     val (pc1, pi1, pf1, pm1) = psiTotals()
     val (b1, t1, w1) = busyTotalIoWait(); val s1 = selfJiffies()
     def psiShare(a: Long, b: Long): Double =
       if (a < 0 || b < 0) -1.0 else math.max(0L, b - a) / wallUs
+    // the PSI and sampler columns do not depend on the jiffy counters,
+    // so an unreadable /proc/stat blanks only the CPU shares
     val bad = b0 < 0 || b1 < 0 || s0 < 0 || s1 < 0 || t1 <= t0
-    val win =
-      if (bad) Window(-1.0, -1.0, -1.0, loadAvg())
-      else {
-        val tot = (t1 - t0).toDouble
-        Window(math.max(0L, (b1 - b0) - (s1 - s0)) / tot,
-               math.max(0L, s1 - s0) / tot,
-               math.max(0L, w1 - w0) / tot, loadAvg(),
-               psiShare(pc0, pc1), psiShare(pi0, pi1),
-               psiShare(pf0, pf1), psiShare(pm0, pm1),
-               stallFrac, stallSite)
-      }
-    (r, win)
+    val tot = (t1 - t0).toDouble
+    def share(x: Long): Double = if (bad) -1.0 else math.max(0L, x) / tot
+    (r, Window(share((b1 - b0) - (s1 - s0)), share(s1 - s0), share(w1 - w0),
+      loadAvg(), psiShare(pc0, pc1), psiShare(pi0, pi1), psiShare(pf0, pf1),
+      psiShare(pm0, pm1), stall._1, stall._2))
   }
 }

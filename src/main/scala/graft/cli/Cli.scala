@@ -8,9 +8,9 @@ import graft.sources.{DirectoryListing, Tsv}
 /** CLI verbs mirroring the reference's entry points (SURVEY.md §3, flags
   * from video_metadata_db.py:849-915):
   *
-  *   build  <dir>... --db out.tsv [--nomedia] [--verbose] [--stub-probe]
-  *                    [--probe-concurrency N]
-  *   update <dir>... --db existing.tsv [--stub-probe]
+  *   build  <dir>... --db out.tsv [--nomedia] [--verbose]
+  *   update <dir>... --db existing.tsv
+  *     (both: [--stub-probe] [--manifest] [--probe-concurrency N])
   *   merge  <in.tsv>... --db merged.tsv
   *   report --db db.tsv                      (the -v variant report)
   *
@@ -83,80 +83,71 @@ object Cli {
          stub, manifest, probeConcurrency)
   }
 
-  private def prober(a: Args): Prober =
-    if (a.stubProbe) new StubProber else new FfprobeProber()
+  /** The roots' file listing, walked once (or, with --manifest, read
+    * from parquet listing manifests — the billions-of-files path). */
+  private def listing(spark: SparkSession, a: Args): DataFrame =
+    if (a.manifest)
+      a.inputs.map(DirectoryListing.fromManifest(spark, _)).reduce(_ unionByName _)
+    else DirectoryListing.walk(spark, a.inputs)
 
-  /** The file listing + sibling-srt listing for the configured source:
-    * a recursive walk of the roots, or (--manifest, S1 at scale) manifest
-    * parquet tables read distributed — same downstream pipeline. */
-  private def listings(spark: SparkSession, a: Args): (DataFrame, DataFrame) =
-    if (a.manifest) {
-      val all = a.inputs.map(DirectoryListing.fromManifest(spark, _))
-        .reduce(_ unionByName _)
-      (all, DirectoryListing.srtOf(all))
-    } else
-      (DirectoryListing.walk(spark, a.inputs),
-       DirectoryListing.srtListing(spark, a.inputs))
-
-  private def buildLines(spark: SparkSession, a: Args): DataFrame = {
-    val (listing, srt) = listings(spark, a)
-    if (a.nomedia) {
-      val n = DirectoryListing.createNomediaMarkers(listing)
-      println(s"[graft] created $n .nomedia markers")
-    }
-    val built = VideoPipeline.build(listing, srt, prober(a),
-      probeConcurrency = a.probeConcurrency)
-    if (a.verbose) {
-      println("[graft] variant report:")
-      VideoPipeline.variants(built).show(100, truncate = false)
-      println("[graft] variant detail:")
-      VideoPipeline.variantDetails(built).show(1000, truncate = false)
-      println("[graft] probe failures:")
-      VideoPipeline.failures(listing, prober(a)).show(100, truncate = false)
-    }
-    Tsv.renderLines(built)
+  /** The build pipeline over `files` (a subset of `listing`): probes each
+    * file once into a persisted frame, which every action in `body` reads,
+    * and hands `body` the built rows and that frame; released on exit. */
+  private def probedOnce[A](listing: DataFrame, files: DataFrame, a: Args,
+      prober: Prober)(body: (DataFrame, DataFrame) => A): A = {
+    val probed = VideoPipeline.probeStage(VideoPipeline.scanFilters(files),
+      prober, probeConcurrency = a.probeConcurrency).persist()
+    try body(VideoPipeline.buildProbed(probed, DirectoryListing.srtOf(listing)), probed)
+    finally probed.unpersist()
   }
 
-  def main(argv: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = runWith(argv, new FfprobeProber())
+
+  /** [[main]] with `prober` in place of ffprobe (a test seam). */
+  private[graft] def runWith(argv: Array[String], prober: Prober): Unit = {
     val a = parse(argv)
     // reuse a pre-existing session (tests, notebooks) and leave it running;
     // stop only a session this invocation created
     val preExisting = SparkSession.getDefaultSession.isDefined
     val spark = session()
-    try run(spark, a)
+    try runVerb(spark, a, if (a.stubProbe) new StubProber else prober)
     finally if (!preExisting) spark.stop()
   }
 
-  private def run(spark: SparkSession, a: Args): Unit =
+  private def runVerb(spark: SparkSession, a: Args, prober: Prober): Unit =
     a.verb match {
       case "build" =>
-        Tsv.writeSingleFile(Tsv.sortLinesDesc(buildLines(spark, a)), a.db)
+        val files = listing(spark, a)
+        if (a.nomedia) {
+          val n = DirectoryListing.createNomediaMarkers(files)
+          println(s"[graft] created $n .nomedia markers")
+        }
+        probedOnce(files, files, a, prober) { (built, probed) =>
+          if (a.verbose) {
+            println("[graft] variant report:")
+            VideoPipeline.variants(built).show(100, truncate = false)
+            println("[graft] variant detail:")
+            VideoPipeline.variantDetails(built).show(1000, truncate = false)
+            println("[graft] probe failures:")
+            VideoPipeline.probeFailures(probed).show(100, truncate = false)
+          }
+          Tsv.writeSingleFile(Tsv.sortLinesDesc(Tsv.renderLines(built)), a.db)
+        }
         println(s"[graft] wrote ${a.db}")
 
       case "update" =>
         val existing = Tsv.readReferenceTsv(spark, a.db)
           .select(col("path_on_volume").as("path"))
-        val listing = VideoPipeline.scanFilters(
-          DirectoryListing.walk(spark, a.inputs))
-        val novel = VideoPipeline.novelFiles(listing, existing)
-        val srt = DirectoryListing.srtListing(spark, a.inputs)
-        val builtNovel = VideoPipeline.withSubtitles(
-          VideoPipeline.deriveColumns(
-            VideoPipeline.probeStage(novel, prober(a))
-              .filter(col("probe_error").isNull)), srt)
-        val oldLines = spark.read.text(a.db)
-          .select(regexp_replace(col("value"), "^﻿", "").as("line"))
-          .filter(col("line") =!= Tsv.headerLine) // updating a merged db
-        val all = oldLines.unionByName(Tsv.renderLines(builtNovel))
-        Tsv.writeSingleFile(Tsv.sortLinesDesc(all), a.db)
+        val files = listing(spark, a)
+        probedOnce(files, VideoPipeline.novelFiles(files, existing), a, prober) {
+          (built, _) =>
+            val all = Tsv.readLines(spark, a.db).unionByName(Tsv.renderLines(built))
+            Tsv.writeSingleFile(Tsv.sortLinesDesc(all), a.db)
+        }
         println(s"[graft] appended novel files into ${a.db}")
 
       case "merge" =>
-        val lines = a.inputs.map { p =>
-          spark.read.text(p)
-            .select(regexp_replace(col("value"), "^﻿", "").as("line"))
-            .filter(col("line") =!= Tsv.headerLine)
-        }.reduce(_ unionByName _)
+        val lines = a.inputs.map(Tsv.readLines(spark, _)).reduce(_ unionByName _)
         Tsv.writeSingleFile(Tsv.sortLinesDesc(lines), a.db, withHeader = true)
         println(s"[graft] merged ${a.inputs.length} inputs into ${a.db}")
 

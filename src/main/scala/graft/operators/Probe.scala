@@ -73,10 +73,8 @@ trait Prober extends Serializable {
     }
 }
 
-/** Real ffprobe prober. ONE invocation per file fetches both the video and
-  * audio entries (the reference runs ffprobe twice per file by its own
-  * admission, video_metadata_db.py:593-594 — fusing them halves process
-  * forks, the dominant cost of the probe stage).
+/** Real ffprobe prober: one call per file; the result comes, by key, from
+  * the first video stream, the first audio stream and the format section.
   *
   * Per-row failures are captured into `probeError` (P3) so one corrupt
   * file never fails a 100 TB job; the quarantine set is a filter away.
@@ -126,32 +124,40 @@ final class FfprobeProber(timeoutSec: Int = 30,
 
   override def probe(path: String): ProbeResult =
     try {
-      // Positional output parity with video_metadata_db.py:218-225:
-      // codec_long_name, width, height, nb_streams, format_long_name,
-      // duration, [title]
-      val v = run(Seq(binary, "-v", "error", "-select_streams", "v:0",
+      val sections = parseSections(run(Seq(binary, "-v", "error",
         "-show_entries",
-        "format_tags=title:format=nb_streams,format_long_name:stream=codec_long_name,width,height:format=duration",
-        "-print_format", "default=noprint_wrappers=1:nokey=1", "-i", path))
-      // Audio entries (video_metadata_db.py:227-229): codec_long_name,
-      // channels; absence detected by line count != 2 (ref :320-339).
-      val a = try run(Seq(binary, "-v", "error", "-select_streams", "a:0",
-        "-show_entries", "stream=channels,codec_long_name",
-        "-print_format", "default=noprint_wrappers=1:nokey=1", "-i", path))
-      catch { case NonFatal(_) => Seq.empty }
+        "stream=codec_type,codec_long_name,width,height,channels:format=nb_streams,format_long_name,duration:format_tags=title",
+        "-of", "default", "-i", path)))
+      def first(p: Map[String, String] => Boolean) = sections.find(p).getOrElse(Map.empty)
+      val v = first(_.get("codec_type").contains("video"))
+      val a = first(_.get("codec_type").contains("audio"))
+      val f = first(_.get("").contains("FORMAT"))
+      def int(kv: Map[String, String], key: String) = kv.get(key).flatMap(_.toIntOption)
       ProbeResult(
-        videoCodec = v.lift(0),
-        width = v.lift(1).flatMap(_.toIntOption),
-        height = v.lift(2).flatMap(_.toIntOption),
-        nbStreams = v.lift(3).flatMap(_.toIntOption),
-        container = v.lift(4),
-        durationRaw = v.lift(5),
-        title = v.lift(6),
-        audioCodec = if (a.length == 2) Some(a(0)) else None,
-        audioChannels = if (a.length == 2) a(1).toIntOption else None)
+        videoCodec = v.get("codec_long_name"),
+        width = int(v, "width"),
+        height = int(v, "height"),
+        nbStreams = int(f, "nb_streams"),
+        container = f.get("format_long_name"),
+        durationRaw = f.get("duration"),
+        title = f.get("TAG:title"),
+        audioCodec = a.get("codec_long_name"),
+        audioChannels = int(a, "channels"))
     } catch {
       case NonFatal(e) => ProbeResult(probeError = Some(e.getMessage))
     }
+
+  /** The `[NAME]` ... `[/NAME]` sections of ffprobe's default writer, in
+    * output order: each section's `key=value` lines, and NAME under "". */
+  private def parseSections(lines: Seq[String]): List[Map[String, String]] =
+    lines.foldLeft(List.empty[Map[String, String]]) {
+      case (acc, l) if l.startsWith("[/") => acc
+      case (acc, l) if l.startsWith("[") => Map("" -> l.drop(1).stripSuffix("]")) :: acc
+      case (kv :: done, l) if l.indexOf('=') > 0 =>
+        val (k, v) = l.splitAt(l.indexOf('='))
+        (kv + (k -> v.tail)) :: done
+      case (acc, _) => acc
+    }.reverse
 }
 
 /** Deterministic stub prober: derives every field arithmetically from a

@@ -40,13 +40,11 @@ object VideoPipeline {
     * of 1 is plain sequential forking.
     */
   def probeStage(listing: DataFrame, prober: Prober,
-                 probePartitions: Option[Int] = None,
                  probeConcurrency: Int = 1): DataFrame = {
     val spark = listing.sparkSession
     import spark.implicits._
-    val src = probePartitions.fold(listing)(n => listing.repartition(n))
     val probed: Dataset[(FileListing, ProbeResult)] =
-      src.select("path", "sizeBytes", "volume").as[FileListing]
+      listing.select("path", "sizeBytes", "volume").as[FileListing]
         .mapPartitions { it =>
           // duplicate: one stream feeds the pool, the other re-pairs
           // results with their listing rows (lockstep — the buffer
@@ -107,14 +105,13 @@ object VideoPipeline {
     * Quarantined rows (probe_error != null) are EXCLUDED here; fetch them
     * with [[failures]] (A5).
     */
-  def build(listing: DataFrame, srtListing: DataFrame, prober: Prober,
-            probePartitions: Option[Int] = None,
-            probeConcurrency: Int = 1): DataFrame = {
-    val probed = probeStage(scanFilters(listing), prober, probePartitions,
-      probeConcurrency)
-    val ok = probed.filter(col("probe_error").isNull)
-    withSubtitles(deriveColumns(ok), srtListing)
-  }
+  def build(listing: DataFrame, srtListing: DataFrame, prober: Prober): DataFrame =
+    buildProbed(probeStage(scanFilters(listing), prober), srtListing)
+
+  /** [[build]] from an already-probed frame (a [[probeStage]] output). */
+  def buildProbed(probed: DataFrame, srtListing: DataFrame): DataFrame =
+    withSubtitles(deriveColumns(probed.filter(col("probe_error").isNull)),
+      srtListing)
 
   /** A3: the reference's mutex-guarded global counters, as observe()
     * metrics — computed inline with the job (no second pass, no driver
@@ -132,9 +129,11 @@ object VideoPipeline {
 
   /** A5: the failure report — quarantine rows only. */
   def failures(listing: DataFrame, prober: Prober): DataFrame =
-    probeStage(scanFilters(listing), prober)
-      .filter(col("probe_error").isNotNull)
-      .select("path", "probe_error")
+    probeFailures(probeStage(scanFilters(listing), prober))
+
+  /** [[failures]] from an already-probed frame. */
+  def probeFailures(probed: DataFrame): DataFrame =
+    probed.filter(col("probe_error").isNotNull).select("path", "probe_error")
 
   /** O1: the reference's global descending sort (documented intent:
     * descending by leading columns; README.md:89). NULLS LAST to match the

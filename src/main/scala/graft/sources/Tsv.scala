@@ -144,8 +144,14 @@ object Tsv {
     * star-unpack (video_metadata_db.py:1124), strips the BOM, trims every
     * field (F11). */
   def readReferenceTsv(spark: SparkSession, path: String): DataFrame =
-    parseLines(spark.read.text(path)
-      .select(regexp_replace(col("value"), "^﻿", "").as("value")))
+    parseLines(readLines(spark, path).select(col("line").as("value")))
+
+  /** The data lines of reference-format TSV files, as written, in a
+    * `line` column: BOM stripped, header lines dropped. */
+  def readLines(spark: SparkSession, path: String): DataFrame =
+    spark.read.text(path)
+      .select(regexp_replace(col("value"), "^\uFEFF", "").as("line"))
+      .filter(col("line") =!= headerLine)
 
   /** Parse reference-format lines (a `value` string column) to typed
     * columns; header lines are dropped. */

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import graft.cli.Cli
 import graft.sources.Tsv
 
@@ -119,8 +120,56 @@ class CliSpec extends SparkSpec {
     val dbM = s"$root/manifest.tsv"
     Cli.main(Array("build", root, "--db", dbW, "--stub-probe"))
     Cli.main(Array("build", mdir, "--manifest", "--db", dbM, "--stub-probe"))
-    val w = new String(Files.readAllBytes(Paths.get(dbW)), "UTF-8")
-    val m = new String(Files.readAllBytes(Paths.get(dbM)), "UTF-8")
-    assert(w == m, "CLI --manifest build must byte-match the walk build")
+    def text(db: String) = new String(Files.readAllBytes(Paths.get(db)), "UTF-8")
+    assert(text(dbW) == text(dbM), "CLI --manifest build must byte-match the walk build")
+
+    // update reads the same source as build: a new file, a fresh manifest
+    touch(s"$root/a/f6/[2005] Delta.webm", 8192)
+    val mdir2 = Files.createTempDirectory("graft-manifest-tbl").toString + "/listing"
+    graft.sources.DirectoryListing.walk(spark, Seq(root))
+      .select(col("path"), col("sizeBytes").as("size_bytes"), col("volume"))
+      .write.parquet(mdir2)
+    Cli.main(Array("update", root, "--db", dbW, "--stub-probe"))
+    Cli.main(Array("update", mdir2, "--manifest", "--db", dbM, "--stub-probe"))
+    assert(text(dbW).contains("Delta"), "walk update missed the new file")
+    assert(text(dbW) == text(dbM), "CLI --manifest update must byte-match the walk update")
+  }
+
+  test("each verb probes every file once, with one ffprobe call") {
+    spark
+    val root = Files.createTempDirectory("graft-forks").toString
+    touch(s"$root/a/[1999] Alpha.mkv", 2048)
+    touch(s"$root/a/[2001] Beta.mp4", 4096)
+    touch(s"$root/a/[2001] Beta.en.srt", 100)
+    touch(s"$root/b/[2002] Gamma.avi", 1024)
+    touch(s"$root/b/[2003] Broken.mkv", 64)
+    // a counting fake: one log line per call; fails on Broken like ffprobe
+    // on a corrupt file
+    val log = Files.createTempFile("ffprobe-calls", ".log")
+    val prober = new graft.operators.FfprobeProber(timeoutSec = 10,
+      binary = ProbeSpec.script(
+        s"""for last; do :; done
+           |echo "$$last" >> '$log'
+           |case "$$last" in *Broken*) echo 'Invalid data found when processing input' >&2; exit 1 ;; esac
+           |printf '[STREAM]\\ncodec_type=video\\ncodec_long_name=H.264\\nwidth=1920\\nheight=1080\\n[/STREAM]\\n'
+           |printf '[FORMAT]\\nnb_streams=1\\nformat_long_name=Matroska / WebM\\nduration=60\\n[/FORMAT]\\n'""".stripMargin))
+    // the file names one CLI run probed, one entry per ffprobe call
+    def probed(argv: String*): Seq[String] = {
+      Files.write(log, Array.emptyByteArray)
+      Cli.runWith(argv.toArray, prober)
+      Files.readAllLines(log).asScala.toSeq
+        .map(p => Paths.get(p).getFileName.toString).sorted
+    }
+    val videos = Seq("[1999] Alpha.mkv", "[2001] Beta.mp4", "[2002] Gamma.avi",
+      "[2003] Broken.mkv").sorted
+    val db = s"$root/out.tsv"
+    assert(probed("build", root, "--db", db) == videos)
+    assert(probed("build", root, "--db", db, "--verbose") == videos)
+    assert(Tsv.readReferenceTsv(spark, db).count() == 3)
+    touch(s"$root/b/[2005] Delta.webm", 8192)
+    // the novel files: the new one and the quarantined one
+    assert(probed("update", root, "--db", db) ==
+      Seq("[2003] Broken.mkv", "[2005] Delta.webm").sorted)
+    assert(Tsv.readReferenceTsv(spark, db).count() == 4)
   }
 }

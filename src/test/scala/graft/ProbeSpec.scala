@@ -12,14 +12,7 @@ import graft.operators.FfprobeProber
   * container has no ffmpeg. The StubProber-based oracle queries never
   * touch these paths. */
 class ProbeSpec extends AnyFunSuite {
-
-  private def script(body: String): String = {
-    val f: Path = Files.createTempFile("fake-ffprobe", ".sh")
-    Files.write(f, s"#!/bin/sh\n$body\n".getBytes("UTF-8"))
-    Files.setPosixFilePermissions(f, PosixFilePermissions.fromString("rwxr-xr-x"))
-    f.toFile.deleteOnExit()
-    f.toString
-  }
+  import ProbeSpec.script
 
   private def timed[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
@@ -54,15 +47,12 @@ class ProbeSpec extends AnyFunSuite {
   }
 
   test("realistic ffprobe output parses into every ProbeResult field") {
-    // emits the reference's positional entry order for the video call
-    // (codec_long_name, width, height, nb_streams, format_long_name,
-    // duration, title) and (codec, channels) for the audio call — the
-    // -select_streams argument distinguishes the two invocations
+    // one call prints every section in ffprobe's default writer format;
+    // the parse is by key, so the video stream need not come first
     val bin = script(
-      """case "$*" in
-        |  *"v:0"*) printf 'H.264 / AVC / MPEG-4 AVC / MPEG-4 part 10\n1920\n1080\n3\nMatroska / WebM\n5430.2\nSome Title\n' ;;
-        |  *)       printf 'AAC (Advanced Audio Coding)\n6\n' ;;
-        |esac""".stripMargin)
+      """printf '[STREAM]\ncodec_long_name=AAC (Advanced Audio Coding)\ncodec_type=audio\nchannels=6\n[/STREAM]\n'
+        |printf '[STREAM]\ncodec_long_name=H.264 / AVC / MPEG-4 AVC / MPEG-4 part 10\ncodec_type=video\nwidth=1920\nheight=1080\n[/STREAM]\n'
+        |printf '[FORMAT]\nnb_streams=3\nformat_long_name=Matroska / WebM\nduration=5430.2\nTAG:title=Some Title\n[/FORMAT]\n'""".stripMargin)
     val r = new FfprobeProber(timeoutSec = 5, binary = bin).probe("/m.mkv")
     assert(r.probeError.isEmpty, s"unexpected error: $r")
     assert(r.videoCodec.contains("H.264 / AVC / MPEG-4 AVC / MPEG-4 part 10"))
@@ -73,22 +63,22 @@ class ProbeSpec extends AnyFunSuite {
     assert(r.title.contains("Some Title"))
     assert(r.audioCodec.contains("AAC (Advanced Audio Coding)"))
     assert(r.audioChannels.contains(6))
-    // audio-less file: audio call returns nothing -> fields null, no error
+    // audio-less file: no audio section -> fields null, no error
     val noAudio = script(
-      """case "$*" in
-        |  *"v:0"*) printf 'MPEG-4 part 2\n640\n360\n1\nAVI (Audio Video Interleaved)\nN/A\n' ;;
-        |  *)       exit 1 ;;
-        |esac""".stripMargin)
+      """printf '[STREAM]\ncodec_long_name=MPEG-4 part 2\ncodec_type=video\nwidth=640\nheight=360\n[/STREAM]\n'
+        |printf '[FORMAT]\nnb_streams=1\nformat_long_name=AVI (Audio Video Interleaved)\nduration=N/A\n[/FORMAT]\n'""".stripMargin)
     val r2 = new FfprobeProber(timeoutSec = 5, binary = noAudio).probe("/m.avi")
     assert(r2.probeError.isEmpty && r2.audioCodec.isEmpty && r2.audioChannels.isEmpty)
     assert(r2.title.isEmpty && r2.durationRaw.contains("N/A"))
   }
 
   test("probeAll: pooled probing preserves input order") {
-    // the fake echoes its last arg (the -i path) as the only output line,
-    // so videoCodec carries the path back out
-    val p = new FfprobeProber(timeoutSec = 10,
-      binary = script("for last; do :; done\nsleep 0.1\necho \"$last\""))
+    // the fake echoes its last arg (the -i path) as the video codec, so
+    // videoCodec carries the path back out
+    val p = new FfprobeProber(timeoutSec = 10, binary = script(
+      """for last; do :; done
+        |sleep 0.1
+        |printf '[STREAM]\ncodec_type=video\ncodec_long_name=%s\n[/STREAM]\n' "$last"""".stripMargin))
     val paths = (1 to 9).map(i => s"/f$i/movie$i.mkv")
     val got = p.probeAll(paths.iterator, concurrency = 4).toList
     assert(got.map(_.videoCodec) == paths.map(Option(_)).toList,
@@ -96,8 +86,8 @@ class ProbeSpec extends AnyFunSuite {
   }
 
   test("probeAll: the pool runs concurrently AND stays bounded") {
-    // each probe = 2 forks (video+audio) x 0.3s sleep ~= 0.6s of pure wait
-    val bin = script("sleep 0.3\necho x")
+    // each probe = 1 fork x 0.6s sleep of pure wait
+    val bin = script("sleep 0.6\necho x")
     val p = new FfprobeProber(timeoutSec = 10, binary = bin)
     val paths = (1 to 6).map(i => s"/f$i/m.mkv")
     val (_, seq) = timed(p.probeAll(paths.iterator, 1).toList)
@@ -112,5 +102,16 @@ class ProbeSpec extends AnyFunSuite {
     val (_, two) = timed(p.probeAll(paths.iterator, 2).toList)
     assert(two >= 1.5,
       s"6 probes at concurrency 2 finished in ${two}s — more than 2 in flight")
+  }
+}
+
+object ProbeSpec {
+  /** A fake probe binary: a shell script running `body`. */
+  def script(body: String): String = {
+    val f: Path = Files.createTempFile("fake-ffprobe", ".sh")
+    Files.write(f, s"#!/bin/sh\n$body\n".getBytes("UTF-8"))
+    Files.setPosixFilePermissions(f, PosixFilePermissions.fromString("rwxr-xr-x"))
+    f.toFile.deleteOnExit()
+    f.toString
   }
 }
